@@ -27,14 +27,25 @@ shared ``_ivfpq_fit`` build stage, similarity.py):
   increments transparently and ``compact_ivfpq_index`` is the LSM
   merge that folds them back into size-targeted base files.
 
-- ``query_ivfpq_index(spark, path, queries, ...)`` replays the exact
-  query math of ``ivfpq_topk`` (probe → per-(query, cell) residual ADC
-  tables → code-only scan → exact-cosine refine) against the stored
-  tables. Same seeds + same corpus ⇒ results identical to the
-  in-memory operator (parity pinned in tests/test_ann_index.py); the
-  PLAN differs deliberately — the ADC scan touches 8-byte code rows
-  only (the float vectors never ride the probed scan), and the refine
-  joins the bounded candidate set back to the vectors table.
+- ``query_ivfpq_index(spark, path, queries, ...)`` and
+  ``screen_against_ivfpq_index(spark, path, batch, ...)`` are thin
+  callers of ONE residual-ADC kernel, ``_adc_topk``, which
+  ``similarity.ivfpq_topk`` and ``pq_topk`` also run over their
+  in-memory encodings. The bounded query set is copied to the driver
+  once (refused past ``_DRIVER_COPY_BYTES`` of rows × d × 8) and
+  probed there; the probed cells' code rows are scanned in numpy by
+  cost-sized shards of whole cells (``_scan_shards``: code bytes from
+  the scan's own file listing times probing queries; small cells
+  share a task; one explicitly partitioned task per shard), each cell
+  cut exactly to its queries' best k·refine_factor on (adc,
+  neighbor_id); a per-query window merges the cells, and the
+  candidates are refined to exact cosines against the ``vectors``
+  table. Every distance, table entry, ADC sum and dot product is a
+  left-to-right float64 fold in ascending index order, so same seeds
+  + same corpus give the in-memory operator's rows bit for bit
+  (parity pinned in tests/test_ann_index.py); the float vectors never
+  ride the code scan, and the refine reads only the bounded candidate
+  set.
 
 - ``ivfpq_index_stats`` is the three-channel rebuild trigger
   (median-normalized per-cell error, global gap, append skew vs
@@ -44,14 +55,14 @@ shared ``_ivfpq_fit`` build stage, similarity.py):
 At 100 TB: build cost is the m+1 seeded KMeans fits plus one encode
 pass (once); per-query-batch cost is n_probe/n_centroids of the code
 files + k·refine_factor vector rows + kilobytes of broadcast state.
-The queries frame stays BOUNDED by contract (same as ``cosine_topk``:
-it is broadcast, and its probed-cell list is collected driver-side —
-both are |Q|-scale, the documented O(|Q|) exception class).
+The query set stays BOUNDED by contract: it is copied to the driver
+and broadcast, the documented O(|Q|) exception class.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -94,17 +105,39 @@ def _quantizer_fingerprint(spark: SparkSession, path: str):
     return tuple(sorted(sig))
 
 
-def _load_quantizers(spark: SparkSession, path: str):
-    """Load the stored geometry contract plus the (kilobyte-scale)
-    quantizer state as numpy arrays — the broadcast closure both the
-    incremental encoder and the drift scan bake into their Arrow
-    batches. Returns (meta dict, cell_mat [n_centroids × d],
-    books list of m [codebook_k × sub] arrays). ``meta`` (mutable —
-    every append rewrites n_vectors) is read fresh; the quantizer
-    tables come from the fingerprint-validated memo above."""
+def _quantizer_arrays(cell_rows, book_rows):
+    """(cell_mat [n_centroids × d], books list of m [codebook_k × sub])
+    from collected ``cells`` (cell, cv) and ``codebooks`` (j, code, cen)
+    rows, ordered by cell and by code."""
     import numpy as np
 
+    m = 1 + max(r["j"] for r in book_rows)
+    cell_mat = np.stack(
+        [np.asarray(r["cv"]) for r in sorted(cell_rows, key=lambda r: r["cell"])]
+    )
+    books = []
+    for j in range(m):
+        rows = sorted((r for r in book_rows if r["j"] == j), key=lambda r: r["code"])
+        books.append(np.stack([np.asarray(r["cen"]) for r in rows]))
+    return cell_mat, books
+
+
+def _load_quantizers(spark: SparkSession, path: str):
+    """Load the stored geometry contract plus the (kilobyte-scale)
+    quantizer state as numpy arrays — the broadcast closure the
+    incremental encoder and the drift scan bake into their Arrow
+    batches. Returns (meta dict, cell_mat [n_centroids × d], books list
+    of m [codebook_k × sub] arrays). ``meta`` (mutable — every append
+    rewrites n_vectors) is read fresh."""
     meta = spark.read.parquet(os.path.join(path, "meta")).first().asDict()
+    return (meta, *_quantizers(spark, path))
+
+
+def _quantizers(spark: SparkSession, path: str):
+    """(cell_mat, books) of the index at ``path`` from the
+    fingerprint-validated memo above, stored read-only so no caller can
+    poison it in place. Their shapes carry the geometry (d, m,
+    n_centroids), so the ADC kernel's callers read no ``meta``."""
     key = os.path.abspath(path)
     fp = None
     try:
@@ -114,19 +147,16 @@ def _load_quantizers(spark: SparkSession, path: str):
     if fp is not None:
         hit = _QUANTIZER_MEMO.get(key)
         if hit is not None and hit[0] == fp:
-            return meta, hit[1], hit[2]
-    cells = spark.read.parquet(os.path.join(path, "cells")).collect()
-    cb = spark.read.parquet(os.path.join(path, "codebooks")).collect()
-    cell_mat = np.stack(
-        [np.asarray(r["cv"]) for r in sorted(cells, key=lambda r: r["cell"])]
+            return hit[1], hit[2]
+    cell_mat, books = _quantizer_arrays(
+        spark.read.parquet(os.path.join(path, "cells")).collect(),
+        spark.read.parquet(os.path.join(path, "codebooks")).collect(),
     )
-    books = []
-    for j in range(meta["m"]):
-        rows = sorted((r for r in cb if r["j"] == j), key=lambda r: r["code"])
-        books.append(np.stack([np.asarray(r["cen"]) for r in rows]))
+    for a in (cell_mat, *books):
+        a.flags.writeable = False
     if fp is not None:
         _QUANTIZER_MEMO[key] = (fp, cell_mat, books)
-    return meta, cell_mat, books
+    return cell_mat, books
 
 
 def _read_index_table(spark: SparkSession, path: str, table: str) -> DataFrame:
@@ -1217,6 +1247,359 @@ def recommend_n_probe(
     }
 
 
+# Driver-copy bound of the ADC kernel: the query matrix it materializes
+# and broadcasts is rows × d float64, refused past this many bytes
+# (50k rows at d=128).
+_DRIVER_COPY_BYTES = 50_000 * 128 * 8
+
+# Predicted work of one scan task, in probing queries × (code bytes +
+# _TABLE_BYTES): consecutive probed cells share a task until their work
+# reaches _SHARD_WORK, so a small probe runs as one task, not one per
+# cell. _TABLE_BYTES prices one query's ADC tables as the code bytes a
+# scan of equal cost reads. scripts/calibrate_adc_scan.py measures the
+# model (plans/r17/adc_scan_calibration.json, numpy on a 4-vCPU host,
+# d=64, m=8): 36-51 µs per query's tables, 24-35 ns per scanned row
+# per query, and 58 (500-row index) to 14 (20k rows) code-file bytes a
+# row, so a query's tables cost the scan of 87 to 21 KB; _SHARD_WORK
+# is 14-83 ms of scan, below the ~150 ms of CPU one more Python task
+# costs.
+_TABLE_BYTES = 36 * 1024
+_SHARD_WORK = 32 << 20
+
+
+def _adc_tables(resid, books_t, sub: int):
+    """ADC lookup tables for a block of query residuals: one
+    [codebook_k × len(resid)] array per subspace j, entry (code, q) =
+    Σ_t (resid[q, j·sub + t] − book_j[code, t])² folded in ascending t.
+    Code-major, so the scan's per-code gathers copy contiguous rows."""
+    import numpy as np
+
+    r_t = np.ascontiguousarray(resid.T)
+    tabs = []
+    for j, b_t in enumerate(books_t):
+        acc = np.zeros((b_t.shape[1], len(resid)))
+        tmp = np.empty_like(acc)
+        for t in range(sub):
+            np.subtract(r_t[j * sub + t][None, :], b_t[t][:, None], out=tmp)
+            np.multiply(tmp, tmp, out=tmp)
+            acc += tmp
+        tabs.append(acc)
+    return tabs
+
+
+def _exact_cut(adc, nid, take: int):
+    """Column indices of each row's ``take`` smallest entries of ``adc``
+    under the total order (adc, nid): argpartition finds the cut value,
+    and only rows whose ties straddle it pay a full lexsort."""
+    import numpy as np
+
+    n = adc.shape[1]
+    if take >= n:
+        return np.broadcast_to(np.arange(n), adc.shape)
+    part = np.argpartition(adc, take - 1, axis=1)[:, :take]
+    kth = np.take_along_axis(adc, part, axis=1).max(axis=1)
+    for i in np.nonzero((adc <= kth[:, None]).sum(axis=1) > take)[0]:
+        part[i] = np.lexsort((nid, adc[i]))[:take]
+    return part
+
+
+def _cell_code_bytes(codes: DataFrame) -> dict[int, int] | None:
+    """Code-file bytes per ``cell`` partition, read from the file
+    listing the codes scan already holds (its relations' file indexes
+    — no Spark job, no extra filesystem call). Empty or None when the
+    corpus is not a ``partitionBy(cell)`` file scan (an in-memory
+    corpus) or the session has no JVM."""
+    import re
+
+    from py4j.protocol import Py4JError
+
+    try:
+        leaves = codes._jdf.queryExecution().analyzed().collectLeaves()
+        out: dict[int, int] = {}
+        for i in range(leaves.size()):
+            files = leaves.apply(i).relation().location().allFiles()
+            for j in range(files.size()):
+                st = files.apply(j)
+                m = re.fullmatch(r"cell=(\d+)", st.getPath().getParent().getName())
+                if m:
+                    out[int(m.group(1))] = out.get(int(m.group(1)), 0) + st.getLen()
+        return out
+    except (AttributeError, Py4JError):  # not a file scan, or no JVM
+        return None
+
+
+def _murmur3_int(v: int) -> int:
+    """Spark's ``Murmur3Hash`` (seed 42) of an int value — the hash a
+    ``repartition(n, col)`` takes modulo n to pick a row's partition."""
+
+    def rotl(x, r):
+        return ((x << r) | (x >> (32 - r))) & 0xFFFFFFFF
+
+    k = rotl((v & 0xFFFFFFFF) * 0xCC9E2D51 & 0xFFFFFFFF, 15)
+    h = rotl(42 ^ (k * 0x1B873593 & 0xFFFFFFFF), 13)
+    h = (h * 5 + 0xE6546B64) & 0xFFFFFFFF
+    h ^= 4
+    h = (h ^ (h >> 16)) * 0x85EBCA6B & 0xFFFFFFFF
+    h = (h ^ (h >> 13)) * 0xC2B2AE35 & 0xFFFFFFFF
+    h ^= h >> 16
+    return h - (1 << 32) if h & 0x80000000 else h
+
+
+def _partition_keys(n: int) -> list[int]:
+    """keys[i] is an int that ``repartition(n, key)`` sends to partition
+    i, so n distinct shards land in n distinct tasks (plain shard ids
+    would collide under the hash and leave about a third of the tasks
+    empty)."""
+    keys: list[int | None] = [None] * n
+    missing, v = n, 0
+    while missing:
+        p = _murmur3_int(v) % n
+        if keys[p] is None:
+            keys[p] = v
+            missing -= 1
+        v += 1
+    return keys
+
+
+def _scan_shards(codes: DataFrame, probes: dict[int, int], n_centroids: int):
+    """The probed code rows, packed by predicted cost into scan shards
+    of whole cells and explicitly partitioned one shard per task.
+    ``probes`` maps each probed cell to the number of queries probing
+    it. Returns (frame with a ``_shard`` key column, shard count).
+
+    Costs come from the code bytes per cell in the scan's own file
+    listing: consecutive probed cells share a shard until its work
+    reaches ``_SHARD_WORK``. With no file listing (an in-memory
+    corpus) a cell is priced by its queries' tables alone. The
+    partition count is the shard count, which AQE does not coalesce —
+    it sizes partitions by bytes and cannot see the Python ADC work
+    behind these narrow rows."""
+    sizes = _cell_code_bytes(codes) or {}
+    cells = sorted(probes)
+    shard_of = [0] * n_centroids
+    n_shards, open_work = 0, _SHARD_WORK  # the last shard's work so far
+    for c in cells:
+        work = probes[c] * (sizes.get(c, 0) + _TABLE_BYTES)
+        if open_work + work > _SHARD_WORK:
+            n_shards, open_work = n_shards + 1, 0
+        shard_of[c] = n_shards - 1
+        open_work += work
+    keys = _partition_keys(n_shards)
+    key_of_cell = F.array(*[F.lit(keys[s]) for s in shard_of])
+    frame = (
+        codes.filter(F.col("cell").isin(cells))
+        .select("neighbor_id", F.col("cell").cast("int").alias("cell"), "codes")
+        .withColumn("_shard", F.element_at(key_of_cell, F.col("cell") + 1))
+        .repartition(n_shards, "_shard")
+    )
+    return frame, n_shards
+
+
+def _adc_topk(
+    cell_mat,
+    books,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    codes: DataFrame,
+    vectors: DataFrame,
+    k: int,
+    n_probe: int,
+    refine_factor: int,
+    row_bound: tuple[int, Callable[[int], str]] | None,
+    refusal: str,
+    bad_dim,
+) -> DataFrame:
+    """The residual-ADC kernel behind ``query_ivfpq_index``,
+    ``screen_against_ivfpq_index``, ``similarity.ivfpq_topk`` and
+    ``similarity.pq_topk`` (one cell at the origin): top-k stored
+    neighbours of each ``queries`` row over a (neighbor_id, cell,
+    codes) corpus and its (neighbor_id, v) vectors. Returns unordered
+    (query_id, neighbor_id, cos_sim, rank) rows, rank <= k.
+
+    1. Copy the query set to the driver once, dropping null and
+       zero-norm vectors. Past ``_DRIVER_COPY_BYTES`` of rows × d × 8
+       bytes raise ``ValueError(f"{refusal}: got <n> rows > <bound>.")``;
+       past a caller's own ``row_bound`` = (limit, message) below that,
+       raise ``ValueError(message(n))``. Either after at most the bound
+       + 1 collected rows. A dimension other than the quantizers'
+       raises ``ValueError(bad_dim(d_q))``.
+    2. Probe, on the driver: the ``n_probe`` nearest cells per query
+       by (squared distance, cell).
+    3. Scan: the probed cells' code rows (a static PartitionFilter on
+       the ``partitionBy(cell)`` layout), packed by cost into shards of
+       whole cells (``_scan_shards``); per cell, a shard task builds
+       its queries' residual ADC tables, sums them over the cell's
+       rows, drops each query's own id and keeps its
+       ``k·refine_factor`` best rows, cut exactly on (adc,
+       neighbor_id). A per-query window repeats that cut over all
+       cells, so the union of exact per-cell cuts gives the exact
+       global one.
+    4. Refine: the candidates, grouped per neighbour so each stored
+       vector crosses the Arrow boundary once, broadcast against the
+       vectors table; numpy computes the exact cosines and the JVM
+       rounds them (Spark ``round`` is HALF_UP, numpy's is not).
+    5. Rank by (cos_sim desc, neighbor_id asc) in one window that
+       also drops the bit-identical rows a transiently duplicated
+       vector (a torn batch's orphan folded before its replay) adds:
+       a duplicate sorts next to its twin, shares its ``dense_rank``
+       and is dropped, so the ranks are those of the distinct rows.
+
+    Every norm, distance, table entry, ADC sum and dot product is a
+    left-to-right float64 fold in ascending index order — the order
+    of the Spark ``aggregate`` expressions this kernel replaced — so
+    results are bit-identical to them."""
+    import numpy as np
+    import pandas as pd
+
+    spark = codes.sparkSession
+    d = cell_mat.shape[1]
+    src = queries.select(
+        F.col(id_col).alias("query_id"),
+        _vec_to_python_expr(queries, vec_col).alias("v0"),
+    ).filter(F.col("v0").isNotNull())
+    id_type = dict(src.dtypes)["query_id"]
+    nid_type = dict(codes.dtypes)["neighbor_id"]
+    cap = _DRIVER_COPY_BYTES // (8 * d)
+    bound = f"{cap} rows ({_DRIVER_COPY_BYTES} bytes at d={d})"
+
+    def refuse(n):
+        return f"{refusal}: got {n} rows > {bound}."
+
+    if row_bound is not None and int(row_bound[0]) <= cap:
+        cap, refuse = int(row_bound[0]), row_bound[1]
+    qpdf = src.limit(cap + 1).toPandas()
+    if len(qpdf) > cap:
+        raise ValueError(refuse(len(qpdf)))
+    x = np.stack(qpdf["v0"].to_numpy()).astype(np.float64) if len(qpdf) else np.zeros((0, d))
+    if x.shape[1] != d:
+        raise ValueError(bad_dim(x.shape[1]))
+    norms = np.zeros(len(x))
+    for j in range(d):  # sqrt(((0 + x0²) + x1²) + ...), the JVM fold order
+        norms += x[:, j] * x[:, j]
+    norms = np.sqrt(norms)
+    keep = norms > 0
+    qids, x = qpdf["query_id"].to_numpy()[keep], x[keep] / norms[keep, None]
+
+    n_probe = min(int(n_probe), len(cell_mat))
+    k_cand = int(k) * int(refine_factor)
+    if not len(x) or n_probe <= 0 or k_cand <= 0:
+        return spark.createDataFrame(
+            [], f"query_id {id_type}, neighbor_id {nid_type}, cos_sim double, rank int"
+        )
+
+    cd = np.zeros((len(x), len(cell_mat)))
+    for j in range(d):
+        diff = x[:, j, None] - cell_mat[None, :, j]
+        cd += diff * diff
+    order = np.lexsort(
+        (np.broadcast_to(np.arange(cd.shape[1]), cd.shape), cd), axis=-1
+    )[:, :n_probe]
+    cell_to_pos = {
+        int(c): np.nonzero((order == c).any(axis=1))[0] for c in np.unique(order)
+    }
+    pos_of = {v: i for i, v in enumerate(qids.tolist())}
+    bc = spark.sparkContext.broadcast((qids, x, cell_to_pos, pos_of))
+    books_t = [np.ascontiguousarray(b.T) for b in books]
+    sub = x.shape[1] // len(books)
+
+    def scan_cell(cell, cpdf):
+        b_ids, b_x, b_pos, _ = bc.value
+        pos = b_pos[cell]
+        nid = cpdf["neighbor_id"].to_numpy()
+        codes_t = np.stack(cpdf["codes"].to_numpy()).astype(np.intp).T
+        resid = b_x[pos] - cell_mat[cell]
+        qid = b_ids[pos]
+        take = min(k_cand, len(nid))
+        # query blocks bound the [rows × block] ADC matrix to 4M floats
+        block = max(1, min(128, (1 << 22) // len(nid)))
+        for lo in range(0, len(pos), block):
+            q_blk = qid[lo : lo + block]
+            adc = np.zeros((len(nid), len(q_blk)))
+            for j, tab in enumerate(_adc_tables(resid[lo : lo + block], books_t, sub)):
+                adc += tab[codes_t[j]]
+            adc = adc.T
+            for i in np.nonzero(np.isin(q_blk, nid))[0]:
+                adc[i, nid == q_blk[i]] = np.inf  # a query never finds itself
+            sel = _exact_cut(adc, nid, take)
+            keep = np.isfinite(np.take_along_axis(adc, sel, axis=1))
+            rows = np.broadcast_to(np.arange(len(q_blk))[:, None], sel.shape)
+            yield pd.DataFrame(
+                {
+                    "query_id": q_blk[rows[keep]],
+                    "neighbor_id": nid[sel[keep]],
+                    "adc": adc[rows[keep], sel[keep]],
+                }
+            )
+
+    def scan(key, cpdf):
+        return pd.concat(
+            [
+                part
+                for cell, rows in cpdf.groupby("cell", sort=False)
+                for part in scan_cell(int(cell), rows)
+            ]
+        )
+
+    shards, _ = _scan_shards(
+        codes, {c: len(p) for c, p in cell_to_pos.items()}, len(cell_mat)
+    )
+    scanned = shards.groupBy("_shard").applyInPandas(
+        scan, f"query_id {id_type}, neighbor_id {nid_type}, adc double"
+    )
+    w_adc = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
+    cand_by_nb = (
+        scanned.withColumn("_r", F.row_number().over(w_adc))
+        .filter(F.col("_r") <= k_cand)
+        .groupBy("neighbor_id")
+        .agg(F.collect_list("query_id").alias("qids"))
+    )
+
+    def refine(batches):
+        _, b_x, _, posmap = bc.value
+        # query columns contiguous, so the per-j gathers below stream
+        # over short vectors instead of striding over a |pairs|×d panel
+        q_t = np.ascontiguousarray(b_x.T)
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            v_t = np.ascontiguousarray(np.stack(pdf["v"].to_numpy()).T)
+            qlists = pdf["qids"].to_numpy()
+            lens = np.fromiter((len(q) for q in qlists), dtype=np.int64, count=len(qlists))
+            rep = np.repeat(np.arange(len(qlists)), lens)
+            flat_q = np.concatenate([np.asarray(q) for q in qlists])
+            pos = pd.Series(flat_q).map(posmap).to_numpy()
+            acc = np.zeros(len(flat_q))
+            for j in range(v_t.shape[0]):
+                acc += v_t[j][rep] * q_t[j][pos]
+            yield pd.DataFrame(
+                {
+                    "query_id": flat_q,
+                    "neighbor_id": pdf["neighbor_id"].to_numpy()[rep],
+                    "cos_raw": acc,
+                }
+            )
+
+    refined = (
+        vectors.join(F.broadcast(cand_by_nb), "neighbor_id")
+        .select("neighbor_id", "v", "qids")
+        .mapInPandas(
+            refine,
+            f"query_id {id_type}, neighbor_id {nid_type}, cos_raw double",
+        )
+    )
+    w_cos = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
+    twin = (F.lag("neighbor_id").over(w_cos) == F.col("neighbor_id")) & (
+        F.lag("cos_sim").over(w_cos) == F.col("cos_sim")
+    )
+    return (
+        refined.select("query_id", "neighbor_id", F.round("cos_raw", 6).alias("cos_sim"))
+        .select("*", F.dense_rank().over(w_cos).alias("rank"), twin.alias("_twin"))
+        .filter((F.col("rank") <= k) & ~F.coalesce("_twin", F.lit(False)))
+        .drop("_twin")
+    )
+
+
 def query_ivfpq_index(
     spark: SparkSession,
     path: str,
@@ -1229,137 +1612,33 @@ def query_ivfpq_index(
 ) -> DataFrame:
     """Top-k over a persisted IVF-PQ index — same output contract and
     determinism as ``ivfpq_topk`` (query_id, neighbor_id, cos_sim,
-    rank; seeded, neighbor-id tie order, refined scores are true
-    cosines)."""
-    meta = spark.read.parquet(os.path.join(path, "meta")).first().asDict()
-    sub = meta["sub"]
-    cells = spark.read.parquet(os.path.join(path, "cells"))
-    cb = spark.read.parquet(os.path.join(path, "codebooks"))
-    codes = _read_index_table(spark, path, "codes")
-    vectors = _read_index_table(spark, path, "vectors")
-
-    q0 = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv0"),
-    )
-    qnorm = F.sqrt(
-        F.aggregate(F.transform("qv0", lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
-    )
-    q = (
-        q0.withColumn("n", qnorm)
-        .filter(F.col("n") > 0)
-        .select("query_id", F.transform("qv0", lambda x: x / F.col("n")).alias("qv"))
-    )
-    qd = q.select(F.size("qv").alias("_d")).first()
-    if qd is not None and qd["_d"] != meta["d"]:
-        raise ValueError(
-            f"query dimension {qd['_d']} != index dimension {meta['d']} "
-            f"(index at {path} was built with d={meta['d']}, m={meta['m']})"
-        )
-
-    # Probe the n_probe nearest cells per query (identical math to
-    # ivfpq_topk).
-    cell_d = F.aggregate(
-        F.zip_with("qv", "cv", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    w_probe = Window.partitionBy("query_id").orderBy(F.asc("cd"), F.asc("cell"))
-    probes = (
-        q.join(F.broadcast(cells))
-        .select(
-            "query_id",
-            "qv",
-            "cell",
-            cell_d.alias("cd"),
-            F.zip_with("qv", "cv", lambda x, y: x - y).alias("qr"),
-        )
-        .withColumn("pr", F.row_number().over(w_probe))
-        .filter(F.col("pr") <= n_probe)
-        .select("query_id", "qv", "cell", "qr")
-    )
-    probes.cache()
-    # bounded driver-side collect (<= |Q| x n_probe ints): an IN-list
-    # of probed cells reaches the code scan as a STATIC PartitionFilter
-    # — a join would need dynamic pruning, and the whole point of the
-    # partitionBy(cell) layout is that unprobed cells are never read
-    probed_cells = sorted(
-        {r["cell"] for r in probes.select("cell").distinct().collect()}
-    )
-
-    # Per-(query, cell) ADC tables from the query residual.
-    sqd = F.aggregate(
-        F.zip_with(
-            F.slice("qr", F.col("j") * sub + 1, sub),
-            F.col("cen"),
-            lambda x, y: (x - y) * (x - y),
+    rank, ordered by query_id then rank; seeded, neighbor-id tie
+    order, refined scores are true cosines). The query set is copied
+    to the driver once and scored by the residual-ADC kernel
+    (``_adc_topk``) against the stored codes and vectors; it is
+    refused past ``_DRIVER_COPY_BYTES`` (rows × d × 8), so a larger
+    query set is served in batches."""
+    cell_mat, books = _quantizers(spark, path)
+    d, m = cell_mat.shape[1], len(books)
+    return _adc_topk(
+        cell_mat,
+        books,
+        queries,
+        id_col,
+        vec_col,
+        _read_index_table(spark, path, "codes"),
+        _read_index_table(spark, path, "vectors"),
+        k,
+        n_probe,
+        refine_factor,
+        None,
+        "query_ivfpq_index serves bounded query sets (serve a larger one "
+        "in batches)",
+        lambda dq: (
+            f"query dimension {dq} != index dimension {d} "
+            f"(index at {path} was built with d={d}, m={m})"
         ),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    tabs = (
-        probes.join(F.broadcast(cb))
-        .select("query_id", "qv", "cell", "j", "code", sqd.alias("dd"))
-        .groupBy("query_id", "qv", "cell", "j")
-        .agg(F.array_sort(F.collect_list(F.struct("code", "dd"))).alias("cl"))
-        .select(
-            "query_id", "qv", "cell", "j",
-            F.transform("cl", lambda s: s["dd"]).alias("tab"),
-        )
-        .groupBy("query_id", "qv", "cell")
-        .agg(F.array_sort(F.collect_list(F.struct("j", "tab"))).alias("jt"))
-        .select(
-            "query_id", "qv", "cell",
-            F.transform("jt", lambda s: s["tab"]).alias("tables"),
-        )
-    )
-
-    # Code-only ADC scan over the PRUNED partitions; the float vectors
-    # never ride this scan (8 code bytes/row is the working set).
-    adc = F.aggregate(
-        F.zip_with("codes", "tables", lambda c, t: F.element_at(t, c.cast("int") + 1)),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    scored = (
-        F.broadcast(tabs)
-        .join(codes.filter(F.col("cell").isin(probed_cells)), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "qv", "neighbor_id", adc.alias("adc"))
-    )
-    w_adc = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
-    cand = scored.withColumn("prank", F.row_number().over(w_adc)).filter(
-        F.col("prank") <= k * refine_factor
-    )
-    # Exact-cosine refine: the bounded candidate set (<= |Q| x k x
-    # refine_factor rows) broadcasts against the vectors table — no
-    # corpus-scale shuffle, row-group stats prune the point reads.
-    cos = F.round(
-        F.aggregate(
-            F.zip_with("v", "qv", lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
-        ),
-        6,
-    )
-    w_cos = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    out = (
-        vectors.join(F.broadcast(cand), "neighbor_id")
-        .select("query_id", "neighbor_id", cos.alias("cos_sim"))
-        # full-row dedupe over the BOUNDED refine set: duplicate
-        # vector rows for an id can exist transiently (a torn batch's
-        # orphans folded into the base before its replay completes it,
-        # healed at the next compaction) and would otherwise fan the
-        # join out into the same neighbor at two ranks. Duplicates are
-        # bit-identical by contract (same id ⇒ same vector ⇒ same
-        # cosine), so whole-row distinct removes exactly them and is a
-        # no-op on a healthy index. (Key-subset dropDuplicates here
-        # trips a Catalyst column-pruning internal error under
-        # exceptAll — whole-row distinct does not.)
-        .dropDuplicates()
-        .withColumn("rank", F.row_number().over(w_cos))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
-    return out
+    ).repartition(1).sortWithinPartitions("query_id", "rank")
 
 
 def screen_against_ivfpq_index(
@@ -1384,38 +1663,19 @@ def screen_against_ivfpq_index(
     against the SERVING index — |batch| probe queries over the
     cell-pruned code scan, nothing corpus-sized recomputed.
 
-    SCREEN-SHAPED EXECUTION (r14, reshaped r16; measured necessity):
-    the expression-built serve path (``query_ivfpq_index``)
-    materializes per-(query, cell) ADC tables through two
-    collect_list/array_sort aggregations and broadcasts them — right
-    for bounded k-NN query sets, measured ~0.1 s/query and OOM-bound
-    near ~10k queries, which an ingest batch routinely exceeds.
-    Screening instead runs the textbook IVF-PQ scan shape with the
-    batch as BROADCAST STATE (the ``exact_self_similarity_join``
-    precedent): (1) the contract-bounded batch is Arrow-materialized
-    ONCE driver-side; normalization, the ``n_probe``-nearest-cell
-    assignment and the cell→query map are one |batch|×n_centroids
-    numpy product on the driver — no assign pass, no checkpoint, no
-    probed-cell collect job; (2) the probed-cell id list — bounded by
-    n_centroids — reaches the codes scan as a static PartitionFilter;
-    (3) a ``groupBy(cell).applyInPandas`` over the NARROW code rows
-    computes the Q_c×256 ADC tables ONCE per subspace and scans all
-    N_c code rows with vectorized table lookups (query-chunked so peak
-    memory is ~chunk×N_c floats), emitting each query's top
-    ``k·refine_factor`` candidates — the queries ride the broadcast,
-    so the only shuffle left carries (neighbor_id, cell, codes), never
-    a query vector (r14 shipped each query vector n_probe× through a
-    checkpoint and a cogroup exchange); (4) the bounded candidate set
-    (≤ |batch|·k·refine_factor narrow rows) broadcasts against the
-    vectors table for the EXACT-cosine refine — true cosines computed
-    by the SAME JVM expressions over the same float64 values as r14,
-    same rounding and (cos desc, neighbor asc) tie order as the serve
-    path. Nothing corpus-sized shuffles; the |batch|-scale objects are
-    the one driver materialization and its broadcast, the class the
-    in-batch peel already carries. ``max_rows`` is the honesty guard
-    on that class: a frame past the ingest contract bound raises
-    loudly instead of silently materializing a corpus driver-side —
-    corpus-scale screening is ``embedding_near_dups``' job.
+    The screen is the serve path with a threshold: the batch is the
+    query set of the same residual-ADC kernel (``_adc_topk``) that
+    ``query_ivfpq_index`` runs, at a narrower default candidate pool
+    (``refine_factor=8``). The contract-bounded batch is copied to the
+    driver once and broadcast; only narrow code rows shuffle, and the
+    exact refine reads at most |batch|·k·refine_factor stored vectors.
+    With the serve's ``refine_factor`` the hit rows are exactly the
+    serve rows at cos_sim ≥ threshold, ties at the candidate cut
+    included. ``max_rows`` is the honesty guard on the driver copy:
+    a batch past it, or past ``_DRIVER_COPY_BYTES`` of rows × d × 8
+    bytes (50k rows at d=128), raises loudly instead of materializing
+    a corpus driver-side — corpus-scale screening is
+    ``embedding_near_dups``' job.
 
     Returns (vec_id, dup_of, cos_sim) for batch vectors whose best
     stored matches clear the threshold (several rows when several
@@ -1428,232 +1688,41 @@ def screen_against_ivfpq_index(
     batch's id set IS this batch's earlier attempt, before or after a
     fold).
 
-    Determinism note: the final output order/content is pinned by the
-    exact-cosine window; inside the ADC stage, candidates tied exactly
-    at the k·refine_factor cut boundary may select either tied row
-    (both score identically downstream) — the serve path's global
-    (adc, neighbor_id) row_number is exact there, the one semantic
-    difference between the two implementations.
-
     Recall caveat (the IVF trade, documented not hidden): a true
     near-dup stored in an UNPROBED cell is missed. At near-dup
     thresholds (cos ≥ 0.9) the quantizer maps the batch vector and its
     stored near-twin to the same or adjacent centroids, so the default
     ``n_probe`` covers the realistic regime; raise it (or use
     ``recommend_n_probe``) where misses are costlier than IO."""
-    import numpy as np
-    import pandas as pd
-
-    meta, cell_mat, books = _load_quantizers(spark, path)
-    d, sub, m = meta["d"], meta["sub"], meta["m"]
-    n_probe = min(int(n_probe), int(meta["n_centroids"]))
-    k_cand = int(k) * int(refine_factor)
-
-    src = batch.select(
-        F.col(id_col).alias("vec_id"),
-        _vec_to_python_expr(batch, vec_col).alias("v0"),
-    )
-    id_dtype = dict(src.dtypes)["vec_id"]
-    empty = spark.createDataFrame(
-        [], f"vec_id {id_dtype}, dup_of {id_dtype}, cos_sim double"
-    )
-    # limit BEFORE the collect so an over-contract frame costs at most
-    # max_rows+1 rows of driver memory before the loud refusal
-    qpdf = src.limit(int(max_rows) + 1).toPandas()
-    if len(qpdf) > max_rows:
-        raise ValueError(
-            f"screen_against_ivfpq_index is for contract-bounded "
-            f"ingest batches: got {len(qpdf)} rows > max_rows="
-            f"{max_rows}. Use embedding_near_dups / query_ivfpq_index "
-            f"for corpus-scale sweeps."
-        )
-    if not len(qpdf):
-        return empty
-    x = np.stack(qpdf["v0"].to_numpy()).astype(np.float64)
-    if x.shape[1] != d:
-        raise ValueError(
-            f"batch dimension {x.shape[1]} != index dimension {d}"
-        )
-    norms = np.sqrt(np.einsum("ij,ij->i", x, x))
-    keep = norms > 0
-    if not keep.any():
-        return empty
-    qids = qpdf["vec_id"].to_numpy()[keep]
-    x = x[keep] / norms[keep, None]
-
-    cell_sq = np.einsum("ij,ij->i", cell_mat, cell_mat)
-    cd = -2.0 * (x @ cell_mat.T) + cell_sq
-    # n_probe smallest cell distances, ties by cell id (same rule as
-    # the serve path's (cd, cell) row_number)
-    order = np.lexsort(
-        (np.broadcast_to(np.arange(cd.shape[1]), cd.shape), cd), axis=-1
-    )[:, :n_probe]
-    # cell → positions of the queries probing it; queries ride the
-    # broadcast into the code scan, so no query vector ever shuffles
-    cell_to_pos = {
-        int(c): np.nonzero((order == c).any(axis=1))[0]
-        for c in np.unique(order)
-    }
-    probed_cells = sorted(cell_to_pos)
-    bc = spark.sparkContext.broadcast((qids, x, cell_to_pos))
-
-    codes = _read_index_table(spark, path, "codes").filter(
-        F.col("cell").isin(probed_cells)
-    ).select("neighbor_id", F.col("cell").cast("int").alias("cell"), "codes")
-    # Explicit fixed-N repartition on the group key: the code rows are
-    # NARROW (the design's point), so AQE — which sizes partitions by
-    # bytes and is blind to the Python ADC work behind them — would
-    # coalesce this exchange to ~1 task and serialize the scan
-    # (measured ×4 at the 10× decade). A user-specified partition
-    # count is exempt from AQE coalescing, and the groupBy below
-    # reuses this exchange (same key, same count — no second shuffle).
-    n_scan_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    codes = codes.repartition(n_scan_parts, "cell")
-
-    book_sq = [np.einsum("ij,ij->i", b, b) for b in books]
-
-    def scan(key, cpdf):
-        cell = int(key[0])
-        b_ids, b_x, b_pos = bc.value
-        pos = b_pos.get(cell)
-        if pos is None or not len(cpdf):
-            return pd.DataFrame(
-                {
-                    "vec_id": b_ids[:0],
-                    "neighbor_id": cpdf["neighbor_id"][:0],
-                    "adc": pd.Series([], dtype="float64"),
-                }
-            )
-        xq = b_x[pos]
-        resid = xq - cell_mat[cell]
-        codes_m = np.stack(cpdf["codes"].to_numpy()).astype(np.int64)
-        nid = cpdf["neighbor_id"].to_numpy()
-        qid = b_ids[pos]
-        n_c = len(nid)
-        take = min(k_cand, n_c)
-        out_q, out_n, out_a = [], [], []
-        for lo in range(0, len(xq), 256):  # bound peak adc memory
-            r = resid[lo : lo + 256]
-            adc = np.zeros((len(r), n_c))
-            for j in range(m):
-                rj = r[:, j * sub : (j + 1) * sub]
-                # full squared distance per (query, code): |r|^2 -
-                # 2 r.b + |b|^2 — the |r|^2 term keeps ADC comparable
-                # ACROSS cells, as in the serve path
-                tab = (
-                    -2.0 * (rj @ books[j].T)
-                    + book_sq[j]
-                    + np.einsum("ij,ij->i", rj, rj)[:, None]
-                )
-                adc += tab[:, codes_m[:, j]]
-            if take < n_c:
-                part = np.argpartition(adc, take - 1, axis=1)[:, :take]
-            else:
-                part = np.broadcast_to(
-                    np.arange(n_c), (len(r), n_c)
-                ).copy()
-            rows = np.repeat(np.arange(len(r)), part.shape[1])
-            cols = part.reshape(-1)
-            out_q.append(np.repeat(qid[lo : lo + 256], part.shape[1]))
-            out_n.append(nid[cols])
-            out_a.append(adc[rows, cols])
-        return pd.DataFrame(
-            {
-                "vec_id": np.concatenate(out_q),
-                "neighbor_id": np.concatenate(out_n),
-                "adc": np.concatenate(out_a),
-            }
-        )
-
-    cand_cells = codes.groupBy("cell").applyInPandas(
-        scan, f"vec_id {id_dtype}, neighbor_id {id_dtype}, adc double"
-    )
-    # global per-query candidate cut across the probed cells, then the
-    # bounded exact refine — true cosines, serve-path tie order
-    w_adc = Window.partitionBy("vec_id").orderBy(
-        F.asc("adc"), F.asc("neighbor_id")
-    )
-    cand = (
-        cand_cells.filter(F.col("neighbor_id") != F.col("vec_id"))
-        .withColumn("_r", F.row_number().over(w_adc))
-        .filter(F.col("_r") <= k_cand)
-        .select("vec_id", "neighbor_id")
-    )
-    # EXACT-cosine refine in the Python stage (r16): the r14/r15 shape
-    # computed 1M+ cosines per decade batch through interpreted JVM
-    # higher-order functions (zip_with + aggregate: ~2·d lambda
-    # evaluations per candidate), pinned to however few tasks the
-    # vectors scan produced — measured ~8 s of a ~13 s screen at the
-    # 10× decade. Instead each candidate stored vector crosses the
-    # Arrow boundary ONCE (grouping candidate pairs per neighbor first,
-    # so v is never duplicated per query) and numpy accumulates the
-    # dot product COLUMN BY COLUMN in ascending j — the exact
-    # left-to-right double-precision fold the JVM aggregate performed,
-    # so every unrounded cosine is bit-identical; rounding stays in the
-    # JVM (Spark round is BigDecimal HALF_UP — not numpy's
-    # half-to-even).
-    cand_by_nb = cand.groupBy("neighbor_id").agg(
-        F.collect_list("vec_id").alias("qids")
-    )
-    vectors = _read_index_table(spark, path, "vectors")
-    pos_of = {v: i for i, v in enumerate(qids.tolist())}
-    bc_pos = spark.sparkContext.broadcast(pos_of)
-
-    def refine(batches):
-        b_ids, b_x, b_pos = bc.value
-        posmap = bc_pos.value
-        # once per task: query columns contiguous, so the per-j gathers
-        # below stream over kilobyte-to-megabyte vectors instead of
-        # striding over a |pairs|×d panel (the obvious vr=v[rep] form
-        # materializes ~0.5 GB at the decade and thrashes every pass)
-        q_t = np.ascontiguousarray(b_x.T)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            v_t = np.ascontiguousarray(np.stack(pdf["v"].to_numpy()).T)
-            qlists = pdf["qids"].to_numpy()
-            lens = np.fromiter(
-                (len(q) for q in qlists), dtype=np.int64, count=len(qlists)
-            )
-            rep = np.repeat(np.arange(len(qlists)), lens)
-            flat_q = np.concatenate([np.asarray(q) for q in qlists])
-            pos = pd.Series(flat_q).map(posmap).to_numpy()
-            acc = np.zeros(len(flat_q), dtype=np.float64)
-            for j in range(v_t.shape[0]):  # ascending j: the JVM fold order
-                acc += v_t[j][rep] * q_t[j][pos]
-            yield pd.DataFrame(
-                {
-                    "vec_id": flat_q,
-                    "dup_of": pdf["neighbor_id"].to_numpy()[rep],
-                    "cos_raw": acc,
-                }
-            )
-
-    refined = (
-        vectors.join(F.broadcast(cand_by_nb), "neighbor_id")
-        .select("neighbor_id", "v", "qids")
-        .mapInPandas(
-            refine,
-            f"vec_id {id_dtype}, dup_of {id_dtype}, cos_raw double",
-        )
-    )
-    w_cos = Window.partitionBy("vec_id").orderBy(
-        F.desc("cos_sim"), F.asc("dup_of")
-    )
-    out = (
-        refined.select(
-            "vec_id", "dup_of", F.round("cos_raw", 6).alias("cos_sim")
-        )
-        # transient duplicate vector rows (torn-batch orphans folded
-        # before their replay completes) are bit-identical by contract
-        # — whole-row distinct removes exactly them, as in the serve
-        # path
-        .dropDuplicates()
-        .withColumn("_rank", F.row_number().over(w_cos))
-        .filter((F.col("_rank") <= k) & (F.col("cos_sim") >= threshold))
-        .drop("_rank")
+    cell_mat, books = _quantizers(spark, path)
+    out = _adc_topk(
+        cell_mat,
+        books,
+        batch,
+        id_col,
+        vec_col,
+        _read_index_table(spark, path, "codes"),
+        _read_index_table(spark, path, "vectors"),
+        k,
+        n_probe,
+        refine_factor,
+        (
+            max_rows,
+            lambda n: (
+                "screen_against_ivfpq_index is for contract-bounded ingest "
+                f"batches: got {n} rows > max_rows={max_rows}. Use "
+                "embedding_near_dups / query_ivfpq_index for corpus-scale "
+                "sweeps."
+            ),
+        ),
+        "screen_against_ivfpq_index is for contract-bounded ingest batches "
+        "(use embedding_near_dups for corpus-scale sweeps)",
+        lambda dq: f"batch dimension {dq} != index dimension {cell_mat.shape[1]}",
+    ).filter(F.col("cos_sim") >= threshold)
+    out = out.select(
+        F.col("query_id").alias("vec_id"),
+        F.col("neighbor_id").cast(dict(out.dtypes)["query_id"]).alias("dup_of"),
+        "cos_sim",
     )
     if exclude_ids is not None:
         out = out.join(
@@ -1719,6 +1788,7 @@ def stream_ingest_semantic_dedup(
     n_probe: int = 6,
     auto_compact_after: int | None = 64,
     lease_retry_s: float = 600.0,
+    max_rows: int = 50_000,
 ):
     """The composed SEMANTIC-dedup ingest loop — the embedding twin of
     ``stream_ingest_dedup``: per micro-batch, (1) screen the batch
@@ -1754,6 +1824,10 @@ def stream_ingest_semantic_dedup(
     store match above threshold is itself — excluded by id.
 
     ``auto_compact_after`` as in ``stream_append_to_ivfpq_index``.
+    ``max_rows`` is the micro-batch ceiling of the two driver-side
+    copies, the index screen and the in-batch pair mine; the screen
+    also refuses a batch past ``_DRIVER_COPY_BYTES`` (50k rows at
+    d=128), so size triggers below both.
     Uses availableNow; returns the started StreamingQuery."""
     from sales_forecast_pyspark_spark.llmdata.dedup_store import (
         _greedy_losers,
@@ -1780,6 +1854,7 @@ def stream_ingest_semantic_dedup(
                 k=k,
                 n_probe=n_probe,
                 exclude_ids=b.select("vec_id"),
+                max_rows=max_rows,
             )
             .select("vec_id")
             .distinct()
@@ -1845,7 +1920,11 @@ def stream_ingest_semantic_dedup(
         # bit-stability argument below from "LSH found the pair" to a
         # guarantee (survivors are PROVABLY mutually non-near-dup)
         in_pairs = exact_self_similarity_join(
-            normed, "vec_id", "embedding", distance_threshold=dist_t
+            normed,
+            "vec_id",
+            "embedding",
+            distance_threshold=dist_t,
+            max_rows=max_rows,
         ).select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
         pairs = (
             in_pairs

@@ -503,6 +503,7 @@ def stream_ingest_dedup_all(
     exact_verify_in_batch: bool = False,
     auto_compact_after: int | None = 64,
     lease_retry_s: float = 600.0,
+    max_rows: int = 50_000,
 ):
     """The composed triad ingest loop — see the module docstring for
     the cost-ladder / exactly-once / verdict-column contracts. Per
@@ -521,6 +522,11 @@ def stream_ingest_dedup_all(
        (fingerprints; the already-computed signatures; the index) and
        publish every batch row with its verdict to
        ``survivors_dir/b=<id>`` (overwrite — idempotent).
+
+    ``max_rows`` is the micro-batch ceiling of stage 3's two
+    driver-side copies (the index screen and the in-batch pair mine);
+    the screen also refuses a batch past its byte bound
+    (``ann_index._DRIVER_COPY_BYTES``, 50k rows at d=128).
 
     Uses availableNow; returns the started StreamingQuery."""
     from sales_forecast_pyspark_spark.llmdata.ann_index import (
@@ -630,6 +636,7 @@ def stream_ingest_dedup_all(
                 k=k,
                 n_probe=n_probe,
                 exclude_ids=s2.select("doc_id"),
+                max_rows=max_rows,
             )
             .select(F.col("vec_id").alias("doc_id"))
             .distinct()
@@ -650,7 +657,11 @@ def stream_ingest_dedup_all(
         # it replaced by ~two orders of magnitude, at recall 1.0)
         dist_t = (2.0 * (1.0 - cos_threshold)) ** 0.5
         sem_pairs = exact_self_similarity_join(
-            normed, "doc_id", "embedding", distance_threshold=dist_t
+            normed,
+            "doc_id",
+            "embedding",
+            distance_threshold=dist_t,
+            max_rows=max_rows,
         ).select(
             F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
         )

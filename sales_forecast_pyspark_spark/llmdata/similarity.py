@@ -1455,11 +1455,15 @@ def pq_topk(
     larger k (one-time, train-sample-sized), and the per-query ADC
     lookup table grows to m x 256 doubles — still kilobytes of
     broadcast state per query batch.
+    The query half is the IVF-PQ residual-ADC kernel
+    (``ann_index._adc_topk``) with one cell centred at the origin.
     Output: (query_id, neighbor_id, cos_sim, rank) like cosine_topk."""
+    import numpy as np
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    spark = df.sparkSession
+    from sales_forecast_pyspark_spark.llmdata.ann_index import _adc_topk
+
     corpus0 = df.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("v0"),
@@ -1496,77 +1500,24 @@ def pq_topk(
     enc = enc.select(
         "neighbor_id", "v", F.array(*[F.col(f"_c{j}") for j in range(m)]).alias("codes")
     )
-    cb = spark.createDataFrame(codebooks, "j int, code int, cen array<double>")
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv0"),
-    )
-    qnorm = F.sqrt(
-        F.aggregate(F.transform("qv0", lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
-    )
-    q = (
-        q.withColumn("n", qnorm)
-        .filter(F.col("n") > 0)
-        .select("query_id", F.transform("qv0", lambda x: x / F.col("n")).alias("qv"))
-    )
-
-    # Per-query ADC lookup table: exact squared distance from the query
-    # subvector to every codebook centroid, assembled into
-    # tables[j][code] via two order-pinned collects.
-    sqd = F.aggregate(
-        F.zip_with(
-            F.slice("qv", F.col("j") * sub + 1, sub),
-            F.col("cen"),
-            lambda x, y: (x - y) * (x - y),
-        ),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    tabs = (
-        q.join(F.broadcast(cb))
-        .select("query_id", "qv", "j", "code", sqd.alias("dd"))
-        .groupBy("query_id", "qv", "j")
-        .agg(F.array_sort(F.collect_list(F.struct("code", "dd"))).alias("cl"))
-        .select("query_id", "qv", "j", F.transform("cl", lambda s: s["dd"]).alias("tab"))
-        .groupBy("query_id", "qv")
-        .agg(F.array_sort(F.collect_list(F.struct("j", "tab"))).alias("jt"))
-        .select("query_id", "qv", F.transform("jt", lambda s: s["tab"]).alias("tables"))
-    )
-
-    # ADC scan over codes only (bounded-queries broadcast, same declared
-    # shape as cosine_topk's baseline but over 32x-smaller rows), then
-    # exact-cosine refine on the pruned candidate set.
-    adc = F.aggregate(
-        F.zip_with(
-            "codes", "tables", lambda c, t: F.element_at(t, c.cast("int") + 1)
-        ),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    scored = (
-        F.broadcast(tabs)
-        .crossJoin(enc)
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "qv", "neighbor_id", "v", adc.alias("adc"))
-    )
-    w_adc = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
-    cand = scored.withColumn("prank", F.row_number().over(w_adc)).filter(
-        F.col("prank") <= k * refine_factor
-    )
-    cos = F.round(
-        F.aggregate(F.zip_with("v", "qv", lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x),
-        6,
-    )
-    w_cos = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        cand.select("query_id", "neighbor_id", cos.alias("cos_sim"))
-        .withColumn("rank", F.row_number().over(w_cos))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
+    # plain PQ is IVF-PQ with one cell centred at the origin: the
+    # residual of a vector is the vector itself, bit for bit
+    books = [np.array([cen for jj, _, cen in codebooks if jj == j]) for j in range(m)]
+    return _adc_topk(
+        np.zeros((1, d)),
+        books,
+        queries,
+        id_col,
+        vec_col,
+        enc.select("neighbor_id", F.lit(0).alias("cell"), "codes"),
+        enc.select("neighbor_id", "v"),
+        k,
+        1,
+        refine_factor,
+        None,
+        "pq_topk takes a bounded query set",
+        lambda dq: f"query dimension {dq} != corpus dimension {d}",
+    ).repartition(1).sortWithinPartitions("query_id", "rank")
 
 
 def _ivfpq_fit(
@@ -1681,7 +1632,13 @@ def ivfpq_topk(
     Scale shape: the corpus stores (cell, m code bytes) per vector;
     a query touches ~n_probe/n_centroids of the corpus, reads only
     codes, and computes m lookups per candidate; the
-    k x refine_factor survivors are re-ranked with exact cosine.
+    k x refine_factor survivors are re-ranked with exact cosine. The
+    query half is the residual-ADC kernel the persisted index serves
+    and screens with (``ann_index._adc_topk``): the bounded query set
+    is copied to the driver once (refused past
+    ``ann_index._DRIVER_COPY_BYTES``), probed and ADC-scored in numpy
+    per probed cell, and refined against the encoded corpus — so the
+    same seeds and corpus give the rows ``query_ivfpq_index`` serves.
     Defaults follow ``pq_topk``'s r09 codebook sweep (codebook_k=256,
     refine_factor=32) plus the r09 probe ladder, resolved in r11
     (VERDICT r09 ask #4 / r10 ask #3) as the operator's CONTRACT:
@@ -1711,93 +1668,27 @@ def ivfpq_topk(
 
     Output and determinism match ``pq_topk`` (seeded, neighbor-id tie
     order, refined scores are true cosines)."""
-    cells, cb, enc, d, sub = _ivfpq_fit(
+    from sales_forecast_pyspark_spark.llmdata.ann_index import (
+        _adc_topk,
+        _quantizer_arrays,
+    )
+
+    cells, cb, enc, d, _ = _ivfpq_fit(
         df, id_col, vec_col, n_centroids, m, codebook_k, seed
     )
-    q0 = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv0"),
-    )
-    qnorm = F.sqrt(
-        F.aggregate(F.transform("qv0", lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
-    )
-    q = (
-        q0.withColumn("n", qnorm)
-        .filter(F.col("n") > 0)
-        .select("query_id", F.transform("qv0", lambda x: x / F.col("n")).alias("qv"))
-    )
-
-    # Probe the n_probe nearest cells per query.
-    cell_d = F.aggregate(
-        F.zip_with("qv", "cv", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    w_probe = Window.partitionBy("query_id").orderBy(F.asc("cd"), F.asc("cell"))
-    probes = (
-        q.join(F.broadcast(cells))
-        .select(
-            "query_id",
-            "qv",
-            "cell",
-            cell_d.alias("cd"),
-            F.zip_with("qv", "cv", lambda x, y: x - y).alias("qr"),
-        )
-        .withColumn("pr", F.row_number().over(w_probe))
-        .filter(F.col("pr") <= n_probe)
-        .select("query_id", "qv", "cell", "qr")
-    )
-
-    # Per-(query, cell) ADC tables from the query RESIDUAL.
-    sqd = F.aggregate(
-        F.zip_with(
-            F.slice("qr", F.col("j") * sub + 1, sub),
-            F.col("cen"),
-            lambda x, y: (x - y) * (x - y),
-        ),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    tabs = (
-        probes.join(F.broadcast(cb))
-        .select("query_id", "qv", "cell", "j", "code", sqd.alias("dd"))
-        .groupBy("query_id", "qv", "cell", "j")
-        .agg(F.array_sort(F.collect_list(F.struct("code", "dd"))).alias("cl"))
-        .select(
-            "query_id", "qv", "cell", "j",
-            F.transform("cl", lambda s: s["dd"]).alias("tab"),
-        )
-        .groupBy("query_id", "qv", "cell")
-        .agg(F.array_sort(F.collect_list(F.struct("j", "tab"))).alias("jt"))
-        .select(
-            "query_id", "qv", "cell",
-            F.transform("jt", lambda s: s["tab"]).alias("tables"),
-        )
-    )
-
-    # Score ONLY probed cells' codes (equality join on cell), refine.
-    adc = F.aggregate(
-        F.zip_with("codes", "tables", lambda c, t: F.element_at(t, c.cast("int") + 1)),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    scored = (
-        tabs.join(enc, "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "qv", "neighbor_id", "v", adc.alias("adc"))
-    )
-    w_adc = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
-    cand = scored.withColumn("prank", F.row_number().over(w_adc)).filter(
-        F.col("prank") <= k * refine_factor
-    )
-    cos = F.round(
-        F.aggregate(F.zip_with("v", "qv", lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x),
-        6,
-    )
-    w_cos = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        cand.select("query_id", "neighbor_id", cos.alias("cos_sim"))
-        .withColumn("rank", F.row_number().over(w_cos))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
+    cell_mat, books = _quantizer_arrays(cells.collect(), cb.collect())
+    return _adc_topk(
+        cell_mat,
+        books,
+        queries,
+        id_col,
+        vec_col,
+        enc.select("neighbor_id", "cell", "codes"),
+        enc.select("neighbor_id", "v"),
+        k,
+        n_probe,
+        refine_factor,
+        None,
+        "ivfpq_topk takes a bounded query set",
+        lambda dq: f"query dimension {dq} != corpus dimension {d}",
+    ).repartition(1).sortWithinPartitions("query_id", "rank")

@@ -28,4 +28,13 @@ prune reported-expired entries opportunistically. Cosmetic edits
 # CORRECTNESS_r10 re-checked both on their new shapes — and were
 # pruned; likewise the four r12 audit-rewrite entries after
 # CORRECTNESS_r12 checked the audit-carrying shapes.)
-REWRITTEN_AT: dict[str, int] = {}
+# The r16 IVF-PQ screen rewrite (semantic_dedup_lifecycle, carried) and
+# the r17 single residual-ADC kernel behind query_ivfpq_index,
+# screen_against_ivfpq_index, ivfpq_topk (ann_ivfpq_topk) and pq_topk
+# (ann_pq_topk).
+REWRITTEN_AT: dict[str, int] = {
+    "ann_ivfpq_topk": 17,
+    "ann_pq_topk": 17,
+    "ann_index_lifecycle": 17,
+    "semantic_dedup_lifecycle": 17,
+}

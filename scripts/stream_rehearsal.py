@@ -118,10 +118,10 @@ def _drain(sdf: DataFrame, *, fmt: str, name: str | None = None,
         w = w.queryName(name)
     if ckpt:
         w = w.option("checkpointLocation", ckpt)
-    t0 = time.time()
+    t0 = time.perf_counter()
     q = w.format(fmt).start()
     q.awaitTermination()
-    wall = time.time() - t0
+    wall = time.perf_counter() - t0
     return wall, _collect_progress(q)
 
 
@@ -256,12 +256,12 @@ def run_partials_fold(spark, sf_dir, files_per_trigger) -> dict:
         # the retention raise and truncation guard must still apply
         # (code-review r08: this path had neither).
         _raise_progress_retention(spark)
-        t0 = time.time()
+        t0 = time.perf_counter()
         q = maintain_partials_stream(
             enrich(src), state, ckpt, keys, qty, rev, price
         )
         q.awaitTermination()
-        wall = time.time() - t0
+        wall = time.perf_counter() - t0
         progs = _collect_progress(q)
         out = {"path": "partials_fold", "wall_s": round(wall, 2)}
         out.update(_progress_stats(progs))
@@ -324,7 +324,7 @@ def run_index_ingest(spark, sf_dir, files_per_trigger) -> dict:
             .parquet(src)
         )
         _raise_progress_retention(spark)
-        t0 = time.time()
+        t0 = time.perf_counter()
         q = stream_append_to_ivfpq_index(
             stream,
             p_stream,
@@ -334,7 +334,7 @@ def run_index_ingest(spark, sf_dir, files_per_trigger) -> dict:
             auto_compact_after=None,
         )
         q.awaitTermination()
-        wall = time.time() - t0
+        wall = time.perf_counter() - t0
         out = {"path": "index_ingest", "wall_s": round(wall, 2)}
         out.update(_progress_stats(_collect_progress(q)))
         # foreachBatch runs several actions per batch (dimension-check
@@ -425,7 +425,7 @@ def run_dedup_ingest(spark, sf_dir, files_per_trigger) -> dict:
             .parquet(src)
         )
         _raise_progress_retention(spark)
-        t0 = time.time()
+        t0 = time.perf_counter()
         q = stream_ingest_dedup(
             stream,
             store,
@@ -435,7 +435,7 @@ def run_dedup_ingest(spark, sf_dir, files_per_trigger) -> dict:
             auto_compact_after=None,  # measuring post-drain tier depth
         )
         q.awaitTermination()
-        wall = time.time() - t0
+        wall = time.perf_counter() - t0
         out = {"path": "dedup_ingest", "wall_s": round(wall, 2)}
         out.update(_progress_stats(_collect_progress(q)))
         # source-truth rows, same correction as index_ingest: the loop
@@ -527,9 +527,9 @@ def run_semantic_ingest(spark, sf_dir, files_per_trigger) -> dict:
         n_files = max(8, -(-n_incoming // 3125))
         dups.unionByName(fresh).repartition(int(n_files)).write.parquet(src)
         path = os.path.join(tmp, "idx")
-        t0 = time.time()
+        t0 = time.perf_counter()
         build_ivfpq_index(emb, path)
-        build_s = time.time() - t0
+        build_s = time.perf_counter() - t0
         # isolated probe cost BEFORE the ingest mutates the index: a
         # fixed 500-vector batch (disjoint id range) against the
         # corpus-sized serving index
@@ -540,11 +540,11 @@ def run_semantic_ingest(spark, sf_dir, files_per_trigger) -> dict:
                     "embedding")
             .localCheckpoint(eager=True)
         )
-        t0 = time.time()
+        t0 = time.perf_counter()
         screen_hits = screen_against_ivfpq_index(
             spark, path, probe, threshold=0.9
         ).select("vec_id").distinct().count()
-        screen_s = time.time() - t0
+        screen_s = time.perf_counter() - t0
 
         schema = spark.read.parquet(src).schema
         stream = (
@@ -553,7 +553,7 @@ def run_semantic_ingest(spark, sf_dir, files_per_trigger) -> dict:
             .parquet(src)
         )
         _raise_progress_retention(spark)
-        t0 = time.time()
+        t0 = time.perf_counter()
         q = stream_ingest_semantic_dedup(
             stream,
             path,
@@ -563,7 +563,7 @@ def run_semantic_ingest(spark, sf_dir, files_per_trigger) -> dict:
             auto_compact_after=None,  # measuring post-drain tier depth
         )
         q.awaitTermination()
-        wall = time.time() - t0
+        wall = time.perf_counter() - t0
         out = {"path": "semantic_ingest", "wall_s": round(wall, 2)}
         out.update(_progress_stats(_collect_progress(q)))
         out["input_rows"] = n_incoming  # source truth, as in the siblings
@@ -708,13 +708,13 @@ def run_ingest_all(spark, sf_dir, files_per_trigger) -> dict:
             os.path.join(tmp, "mh"),
             os.path.join(tmp, "idx"),
         )
-        t0 = time.time()
+        t0 = time.perf_counter()
         build_fp_store(corpus, fp)
         build_minhash_store(corpus, mh, n=1)  # unigram: see docstring
         build_ivfpq_index(
             corpus.select("doc_id", "embedding"), idx, id_col="doc_id"
         )
-        build_s = time.time() - t0
+        build_s = time.perf_counter() - t0
 
         schema = spark.read.parquet(src).schema
         stream = (
@@ -723,7 +723,7 @@ def run_ingest_all(spark, sf_dir, files_per_trigger) -> dict:
             .parquet(src)
         )
         _raise_progress_retention(spark)
-        t0 = time.time()
+        t0 = time.perf_counter()
         q = stream_ingest_dedup_all(
             stream,
             fp,
@@ -734,7 +734,7 @@ def run_ingest_all(spark, sf_dir, files_per_trigger) -> dict:
             auto_compact_after=None,  # measuring post-drain tier depth
         )
         q.awaitTermination()
-        wall = time.time() - t0
+        wall = time.perf_counter() - t0
         out = {"path": "ingest_all", "wall_s": round(wall, 2)}
         out.update(_progress_stats(_collect_progress(q)))
         out["input_rows"] = n_incoming  # source truth, as in the siblings
@@ -826,26 +826,29 @@ def run_dedup_screen_ratio(spark, sf_dir, files_per_trigger) -> dict:
     tmp = tempfile.mkdtemp(prefix="stream_rehearsal_ratio_")
     try:
         store = os.path.join(tmp, "store")
-        t0 = time.time()
+        t0 = time.perf_counter()
         build_minhash_store(docs, store)
-        build_s = time.time() - t0
-        t0 = time.time()
+        build_s = time.perf_counter() - t0
+        t0 = time.perf_counter()
         n_hits = screen_against_minhash_store(
             batch, store, threshold=0.5
         ).count()
-        screen_s = time.time() - t0
-        t0 = time.time()
+        screen_s = time.perf_counter() - t0
+        t0 = time.perf_counter()
         n_oneshot = minhash_near_dedup(
             docs.unionByName(batch), threshold=0.5
         ).count()
-        oneshot_s = time.time() - t0
+        oneshot_s = time.perf_counter() - t0
+        # the ratio is derived from the REPORTED (rounded) times, so a
+        # reader recomputing it from this record gets the same value
+        screen_s, oneshot_s = round(screen_s, 2), round(oneshot_s, 2)
         return {
             "path": "dedup_screen_ratio",
             "corpus_docs": n_docs,
             "batch_docs": 500,
             "build_s": round(build_s, 2),
-            "screen_s": round(screen_s, 2),
-            "oneshot_s": round(oneshot_s, 2),
+            "screen_s": screen_s,
+            "oneshot_s": oneshot_s,
             "ratio": round(oneshot_s / max(screen_s, 1e-9), 2),
             "screen_hits": n_hits,
             "oneshot_pairs": n_oneshot,
